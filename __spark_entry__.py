@@ -904,16 +904,6 @@ def _q_dedup_minhash_lsh(spark, sf_dir):
     return minhash_dedup_pairs(_docs(spark, sf_dir), threshold=0.8)
 
 
-def _q_repeated_spans(spark, sf_dir):
-    """Cross-document repeated 3-gram spans (substring-level dedup,
-    Lee et al. 2022): merged per-doc token spans whose n-grams occur in
-    at least one other document.  Oracle: string-level self-join + the
-    same gaps-and-islands window in SQL."""
-    from tesseract_rs_spark.functions.cleaning import repeated_ngram_spans
-
-    return repeated_ngram_spans(_docs(spark, sf_dir), n=3)
-
-
 def _q_repeated_spans_m(spark, sf_dir):
     """Substring dedup, BOTH halves of Lee et al. 2022 under one name:
     the find half (repeated-span rows, part='span') and the scrub half
@@ -1055,10 +1045,6 @@ def _q_token_count_bpe(spark, sf_dir):
     )
 
 
-def _q_dedup_embedding(spark, sf_dir):
-    return embedding_dup_pairs(_emb(spark, sf_dir), threshold=0.45)
-
-
 def _q_dedup_embedding_m(spark, sf_dir):
     """Embedding near-dup surface, four operators tagged by method:
     the LSH + exact-verify pairs, the SemDeDup IVF cell-bucketed pairs,
@@ -1127,20 +1113,6 @@ def _media_pgm(spark, sf_dir):
 
     return docs.select("doc_id", "text").mapInPandas(
         gen, "media_id long, payload binary"
-    )
-
-
-def _q_media_image_stats(spark, sf_dir):
-    """REAL image decode end-to-end: each document rendered to a raster
-    page, encoded as a binary PGM (P5), decoded back by the real PGM
-    parser, and reduced to pixel statistics.  Width/height follow the
-    shared render geometry and n_ink_px is the glyph ink mass — both
-    closed-form from the source text (ink per glyph = 48 spine px + 56 px
-    per set bit of the charset code)."""
-    from tesseract_rs_spark.functions.multimodal import image_stats
-
-    return image_stats(_media_pgm(spark, sf_dir)).select(
-        F.col("media_id").alias("doc_id"), "status", "width", "height", "n_ink_px"
     )
 
 
@@ -2658,22 +2630,6 @@ def _oracle_parts() -> dict[str, str]:
                CAST(len(string_split(text, ' ')) AS BIGINT) AS n_words
         FROM documents
         """,
-        "ocr_symbols": _WORDS_CTE
-        + f"""
-        , chars AS (
-          SELECT doc_id, wid, (wid - 1) // {WPL} AS li,
-                 generate_subscripts(string_split(w, ''), 1) AS sid,
-                 unnest(string_split(w, '')) AS glyph
-          FROM words
-        )
-        SELECT doc_id,
-               CAST(li // {LPP} AS BIGINT) AS para_id,
-               CAST(li % {LPP} AS BIGINT) AS line_id,
-               CAST((wid - 1) % {WPL} AS BIGINT) AS word_id,
-               CAST(sid - 1 AS BIGINT) AS symbol_id,
-               glyph
-        FROM chars
-        """,
         "ocr_choices": _WORDS_CTE
         + f"""
         , chars AS (
@@ -2776,20 +2732,6 @@ def _oracle_parts() -> dict[str, str]:
                ((wid - 1) % 5 <> 0 AND (wid - 1) % 7 <> 0
                 AND (wid - 1) % 11 = 0 AND sid = 0) AS is_dropcap
         FROM syms
-        """,
-        "ocr_font_attrs": _WORDS_CTE
-        + f"""
-        SELECT doc_id,
-               CAST((wid - 1) // {WPL} // {LPP} AS BIGINT) AS para_id,
-               CAST((wid - 1) // {WPL} % {LPP} AS BIGINT) AS line_id,
-               CAST((wid - 1) % {WPL} AS BIGINT) AS word_id,
-               w AS word,
-               CAST(NULL AS BOOLEAN) AS is_bold,
-               CAST(NULL AS BOOLEAN) AS is_italic,
-               CAST(NULL AS BOOLEAN) AS is_monospace,
-               CAST(18 AS BIGINT) AS pointsize,
-               CAST(NULL AS BIGINT) AS font_id
-        FROM words
         """,
         "ocr_multilang": _WORDS_CTE
         + f"""
@@ -3411,20 +3353,6 @@ def _oracle_parts() -> dict[str, str]:
         SELECT strftime(ws, '%Y-%m-%d %H') AS window_start, event_type,
                count(*) AS n
         FROM two GROUP BY 1, 2
-        """,
-        "events_top_type": """
-        WITH hourly AS (
-          SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H') AS hour,
-                 event_type, count(*) AS n
-          FROM events GROUP BY 1, 2
-        ),
-        ranked AS (
-          SELECT hour, event_type, n,
-                 row_number() OVER (PARTITION BY hour
-                                    ORDER BY n DESC, event_type ASC) AS r
-          FROM hourly
-        )
-        SELECT hour, event_type, n FROM ranked WHERE r = 1
         """,
         "events_interval_join": """
         WITH gaps AS (

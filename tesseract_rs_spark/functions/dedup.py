@@ -70,14 +70,22 @@ def dedup_keep_first(
     At 100 TB this moves at most (map partitions x distinct digests)
     candidate rows, bounded above by the old one-row-per-input shuffle;
     pre-bucketing the table by digest (plans/bucketing) removes even
-    that exchange.  Adds the digest as a ``fingerprint`` column."""
+    that exchange.  NULL ids sort first (``ORDER BY id`` semantics): the
+    ordering key is ``(id IS NOT NULL, id)``, never NULL itself, so an
+    all-NULL-id group keeps its row instead of ``min_by`` skipping it.
+    Adds the digest as a ``fingerprint`` column."""
     cols = docs.columns
     return (
         docs.withColumn(
             "fingerprint", F.sha2(F.col(col).cast("binary"), 256)
         )
         .groupBy("fingerprint")
-        .agg(F.min_by(F.struct(*cols), F.col(id_col)).alias("_r"))
+        .agg(
+            F.min_by(
+                F.struct(*cols),
+                F.struct(F.col(id_col).isNotNull(), F.col(id_col)),
+            ).alias("_r")
+        )
         .select(*[F.col(f"_r.{c}").alias(c) for c in cols], "fingerprint")
     )
 
@@ -413,6 +421,19 @@ def kmv_sketch(
     )
 
 
+def _offsets_dtype(arrow_type):
+    """Offsets width of an Arrow binary column: int32 for ``binary``,
+    int64 for ``large_binary`` (``arrow.useLargeVarTypes``).  Any other
+    type fails loudly rather than being misread as digest bytes."""
+    import pyarrow as pa
+
+    if pa.types.is_large_binary(arrow_type):
+        return np.int64
+    if pa.types.is_binary(arrow_type):
+        return np.int32
+    raise TypeError(f"simhash digests: expected binary, got {arrow_type}")
+
+
 def simhash(
     docs: DataFrame,
     id_col: str = "doc_id",
@@ -460,10 +481,10 @@ def simhash(
                 continue
             ids = batch.column(0)
             hx = batch.column(1)
-            # binary column = validity + int32 offsets + data buffer; the
+            # binary column = validity + offsets + data buffer; the
             # offsets slice respects a possibly non-zero array offset
             bufs = hx.buffers()
-            off = np.frombuffer(bufs[1], dtype=np.int32)[
+            off = np.frombuffer(bufs[1], dtype=_offsets_dtype(hx.type))[
                 hx.offset : hx.offset + len(hx) + 1
             ].astype(np.int64)
             counts = (off[1:] - off[:-1]) // 8

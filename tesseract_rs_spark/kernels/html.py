@@ -567,38 +567,6 @@ def extract_doc(payload, cfg: ExtractConfig) -> DocResult:
     )
 
 
-def word_columns(result: DocResult):
-    """Columnar word explode — the vectorized twin of :func:`word_rows`:
-    returns (words, block_id, para_id, line_id, word_id, conf, span_start,
-    span_end) where everything except ``words`` is a numpy array.  Per-word
-    Python is limited to one C-speed ``list.extend`` per line; id columns
-    are built with ``np.repeat`` over per-line counts (the reading-order
-    ids of /root/reference/src/result_iterator.rs:41-71)."""
-    import numpy as np
-
-    words: list = []
-    meta: list = []  # (block_id, line_id, n_words, score, src_start, src_end)
-    for block_id, b in enumerate(result.blocks):
-        for line_id, ws in enumerate(b.lines):
-            words.extend(ws)
-            meta.append((block_id, line_id, len(ws), b.score, b.src_start, b.src_end))
-    if not meta:
-        z = np.empty(0, dtype=np.int64)
-        return words, z, z, z, z, np.empty(0, dtype=np.float64), z, z
-    m = np.asarray(meta, dtype=np.float64)
-    counts = m[:, 2].astype(np.int64)
-    block = np.repeat(m[:, 0].astype(np.int64), counts)
-    line = np.repeat(m[:, 1].astype(np.int64), counts)
-    conf = np.repeat(m[:, 3], counts)
-    start = np.repeat(m[:, 4].astype(np.int64), counts)
-    end = np.repeat(m[:, 5].astype(np.int64), counts)
-    total = int(counts.sum())
-    offsets = np.repeat(np.cumsum(counts) - counts, counts)
-    word_id = np.arange(total, dtype=np.int64) - offsets
-    para = np.zeros(total, dtype=np.int64)
-    return words, block, para, line, word_id, conf, start, end
-
-
 def word_rows(result: DocResult):
     """Flatten a DocResult into word-level rows — the exploded
     ResultIterator analog (/root/reference/src/result_iterator.rs:41-71):

@@ -43,6 +43,7 @@ from pyspark.sql import DataFrame
 from tesseract_rs_spark.config import ExtractConfig
 
 _CELL_SHAPE_ROW = -1  # pos of the per-char example-count row
+OCR_ADAPTED_FIELDS = "text string, status string, mean_conf long, n_words long"
 
 
 def accumulate_page_glyphs(acc: dict, payload, truth: str | None) -> None:
@@ -181,34 +182,18 @@ def ocr_text_adapted(
     where they match better, the distributed stand-in for the
     reference's mutated classifier.  (ids, text, status, mean_conf,
     n_words)."""
-    from tesseract_rs_spark.operators.ocr import _id_schema
+    from tesseract_rs_spark.operators.ocr import _map_pages, raster_batch_results
 
     cfg = cfg or ExtractConfig()
-    schema = (
-        _id_schema(pages, id_cols)
-        + ", text string, status string, mean_conf long, n_words long"
-    )
-    id_cols = tuple(id_cols)
     langs = (*cfg.langs, name)
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def rows_for_batch(pdf):
         from tesseract_rs_spark.kernels.raster import register_atlas
-        from tesseract_rs_spark.operators.ocr import raster_batch_results
 
         register_atlas(name, atlas)
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            results = raster_batch_results(pdf, cfg, payload_col, langs=langs)
-            out = {c: pdf[c].to_numpy() for c in id_cols}
-            out["text"] = [r.text for r in results]
-            out["status"] = [r.status for r in results]
-            out["mean_conf"] = pd.array(
-                [r.mean_conf for r in results], dtype="int64"
-            )
-            out["n_words"] = pd.array(
-                [len(r.words) for r in results], dtype="int64"
-            )
-            yield pd.DataFrame(out)
+        return [
+            [(r.text, r.status, r.mean_conf, len(r.words))]
+            for r in raster_batch_results(pdf, cfg, payload_col, langs=langs)
+        ]
 
-    return pages.select(*id_cols, payload_col).mapInPandas(gen, schema=schema)
+    return _map_pages(pages, id_cols, payload_col, OCR_ADAPTED_FIELDS, rows_for_batch)

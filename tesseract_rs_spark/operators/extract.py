@@ -76,7 +76,7 @@ def extract_words_arrow_batch(batch, cfg: ExtractConfig, n_ids: int):
 
     htmls = batch.column(n_ids).to_pylist()
     results = [extract_doc(h, cfg) for h in htmls]
-    # ONE meta table for the whole batch instead of word_columns' ~10
+    # ONE meta table (one row per line) for the whole batch, not ~10
     # small numpy calls per document: the line rows concatenate in doc
     # order, so every derived column equals the per-doc concatenation
     # (r7 — the per-doc numpy overhead was ~half the explode cost)

@@ -7,12 +7,15 @@ page-iterator surface (/root/reference/src/page_iterator.rs:110-175)."""
 
 from __future__ import annotations
 
-from typing import Iterator, Sequence
+from itertools import repeat
+from operator import add, itemgetter
+from typing import Callable, Iterator, Sequence
 
 import numpy as np
 import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
+from pyspark.sql.types import BooleanType, DataType, DoubleType, LongType
 
 from tesseract_rs_spark.config import ExtractConfig
 from tesseract_rs_spark.kernels.raster import (
@@ -22,6 +25,7 @@ from tesseract_rs_spark.kernels.raster import (
     raster_symbols,
     thresholded_image,
 )
+from tesseract_rs_spark.operators.extract import _id_schema
 
 OCR_TEXT_FIELDS = (
     "text string, status string, threshold long, orientation_deg long, "
@@ -31,11 +35,82 @@ OCR_WORD_FIELDS = (
     "block_id long, para_id long, line_id long, word_id long, word string, "
     "conf double, left long, top long, right long, bottom long, baseline_y long"
 )
+OCR_OSD_FIELDS = (
+    "status string, orientation_deg long, orientation_conf double, "
+    "script string, script_conf double, writing_direction string, "
+    "textline_order string, deskew_deg double, text string"
+)
+OCR_SYMBOL_FIELDS = (
+    "para_id long, line_id long, word_id long, symbol_id long, glyph string, "
+    "conf double, choices array<struct<glyph: string, conf: double>>"
+)
+OCR_SYMBOL_ATTR_FIELDS = (
+    "para_id long, line_id long, word_id long, symbol_id long, glyph string, "
+    "left long, top long, right long, bottom long, "
+    "is_superscript boolean, is_subscript boolean, is_dropcap boolean"
+)
+OCR_LAYOUT_FIELDS = (
+    "para_id long, n_lines long, n_words long, left long, top long, "
+    "right long, bottom long, block_type string, justification string, "
+    "first_line_indent long"
+)
+OCR_THRESHOLD_FIELDS = (
+    "status string, threshold long, scale_factor long, "
+    "width long, height long, bits binary"
+)
+
+# numpy dtype per primitive column type; every other type (string,
+# binary, nested) is handed to Arrow as Python objects
+_NUMPY_DTYPES = {LongType: np.int64, DoubleType: np.float64, BooleanType: bool}
 
 
-def _id_schema(pages: DataFrame, id_cols: Sequence[str]) -> str:
-    by_name = {f.name: f for f in pages.schema.fields}
-    return ", ".join(f"{c} {by_name[c].dataType.simpleString()}" for c in id_cols)
+def _map_pages(
+    pages: DataFrame,
+    id_cols: Sequence[str],
+    payload_col: str,
+    fields: str,
+    rows_for_batch: Callable[[pd.DataFrame], list],
+) -> DataFrame:
+    """THE raster boundary, shared by every raster surface: ``(id_cols...,
+    fields...)`` from one mapInPandas stage, so a surface is stated once,
+    as its ``*_FIELDS`` DDL plus its row projection.  ``rows_for_batch(pdf)``
+    returns one list of row tuples per page, each tuple in ``fields``
+    order — one row per page for the scalar surfaces, zero or more for
+    the exploded ones.  Column names and dtypes are parsed from
+    ``fields`` once, on the driver; per batch the ids are
+    ``np.repeat``-ed by each page's row count, the rows are gathered with
+    one C-speed ``list.extend`` per page and transposed with ONE ``zip``
+    per batch; a row width that differs from ``fields`` raises instead of
+    shifting columns."""
+    id_cols = tuple(id_cols)
+    schema = DataType.fromDDL(_id_schema(pages, id_cols) + ", " + fields)
+    columns = [
+        (f.name, _NUMPY_DTYPES.get(type(f.dataType)))
+        for f in schema.fields[len(id_cols):]
+    ]
+
+    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            per_page = rows_for_batch(pdf)
+            counts = np.fromiter(map(len, per_page), np.int64, len(per_page))
+            out: dict = {c: np.repeat(pdf[c].to_numpy(), counts) for c in id_cols}
+            rows: list = []
+            for r in per_page:
+                rows.extend(r)
+            t = list(zip(*rows)) if rows else [()] * len(columns)
+            for (name, dtype), col in zip(columns, t, strict=True):
+                # object columns stay object even when empty: an empty list
+                # would infer float64, which Arrow cannot convert to a
+                # nested type
+                out[name] = (
+                    pd.Series(col, dtype=object) if dtype is None
+                    else np.asarray(col, dtype)
+                )
+            yield pd.DataFrame(out)
+
+    return pages.select(*id_cols, payload_col).mapInPandas(gen, schema=schema)
 
 
 def raster_batch_results(pdf, cfg: ExtractConfig, payload_col: str = "html",
@@ -65,39 +140,15 @@ def ocr_text(
     payload_col: str = "html",
 ) -> DataFrame:
     cfg = cfg or ExtractConfig()
-    schema = _id_schema(pages, id_cols) + ", " + OCR_TEXT_FIELDS
-    id_cols = tuple(id_cols)
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            results = raster_batch_results(pdf, cfg, payload_col)
-            out = {c: pdf[c].to_numpy() for c in id_cols}
-            out["text"] = [r.text for r in results]
-            out["status"] = [r.status for r in results]
-            out["threshold"] = pd.array([r.threshold for r in results], dtype="int64")
-            out["orientation_deg"] = pd.array(
-                [r.orientation_deg for r in results], dtype="int64"
-            )
-            out["deskew_deg"] = pd.array(
-                [r.deskew_deg for r in results], dtype="float64"
-            )
-            out["n_components"] = pd.array(
-                [r.n_components for r in results], dtype="int64"
-            )
-            out["n_words"] = pd.array([len(r.words) for r in results], dtype="int64")
-            out["mean_conf"] = pd.array([r.mean_conf for r in results], dtype="int64")
-            yield pd.DataFrame(out)
+    def rows_for_batch(pdf):
+        return [
+            [(r.text, r.status, r.threshold, r.orientation_deg, r.deskew_deg,
+              r.n_components, len(r.words), r.mean_conf)]
+            for r in raster_batch_results(pdf, cfg, payload_col)
+        ]
 
-    return pages.select(*id_cols, payload_col).mapInPandas(gen, schema=schema)
-
-
-OCR_OSD_FIELDS = (
-    "status string, orientation_deg long, orientation_conf double, "
-    "script string, script_conf double, writing_direction string, "
-    "textline_order string, deskew_deg double, text string"
-)
+    return _map_pages(pages, id_cols, payload_col, OCR_TEXT_FIELDS, rows_for_batch)
 
 
 def ocr_osd(
@@ -115,46 +166,16 @@ def ocr_osd(
     config's ``min_orientation_margin`` (set_min_orientation_margin
     analog) governs the disambiguation vote."""
     cfg = cfg or ExtractConfig()
-    schema = _id_schema(pages, id_cols) + ", " + OCR_OSD_FIELDS
-    id_cols = tuple(id_cols)
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            results = raster_batch_results(pdf, cfg, payload_col)
-            out = {c: pdf[c].to_numpy() for c in id_cols}
-            out["status"] = [r.status for r in results]
-            out["orientation_deg"] = pd.array(
-                [r.orientation_deg for r in results], dtype="int64"
-            )
-            out["orientation_conf"] = pd.array(
-                [r.orientation_conf for r in results], dtype="float64"
-            )
-            out["script"] = [r.script for r in results]
-            out["script_conf"] = pd.array(
-                [r.script_conf for r in results], dtype="float64"
-            )
-            out["writing_direction"] = [r.writing_direction for r in results]
-            out["textline_order"] = [r.textline_order for r in results]
-            out["deskew_deg"] = pd.array(
-                [r.deskew_deg for r in results], dtype="float64"
-            )
-            out["text"] = [r.text for r in results]
-            yield pd.DataFrame(out)
+    def rows_for_batch(pdf):
+        return [
+            [(r.status, r.orientation_deg, r.orientation_conf, r.script,
+              r.script_conf, r.writing_direction, r.textline_order,
+              r.deskew_deg, r.text)]
+            for r in raster_batch_results(pdf, cfg, payload_col)
+        ]
 
-    return pages.select(*id_cols, payload_col).mapInPandas(gen, schema=schema)
-
-
-OCR_SYMBOL_FIELDS = (
-    "para_id long, line_id long, word_id long, symbol_id long, glyph string, "
-    "conf double, choices array<struct<glyph: string, conf: double>>"
-)
-OCR_LAYOUT_FIELDS = (
-    "para_id long, n_lines long, n_words long, left long, top long, "
-    "right long, bottom long, block_type string, justification string, "
-    "first_line_indent long"
-)
+    return _map_pages(pages, id_cols, payload_col, OCR_OSD_FIELDS, rows_for_batch)
 
 
 def ocr_symbols(
@@ -166,48 +187,12 @@ def ocr_symbols(
 ) -> DataFrame:
     """Symbol-level rows with descending-confidence choice lists
     (/root/reference/src/choice_iterator.rs:30-71)."""
-    cfg = cfg or ExtractConfig()
-    wl = cfg.char_whitelist
-    schema = _id_schema(pages, id_cols) + ", " + OCR_SYMBOL_FIELDS
-    id_cols = tuple(id_cols)
+    wl = (cfg or ExtractConfig()).char_whitelist
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            per_doc = [raster_symbols(p, wl, k)[1] for p in pdf[payload_col]]
-            counts = np.fromiter(
-                (len(r) for r in per_doc), dtype=np.int64, count=len(per_doc)
-            )
-            out: dict = {
-                c: np.repeat(pdf[c].to_numpy(), counts) for c in id_cols
-            }
-            rows: list = []
-            for r in per_doc:
-                rows.extend(r)
-            t = list(zip(*rows)) if rows else [[]] * 7
-            for i, name in enumerate(
-                ("para_id", "line_id", "word_id", "symbol_id")
-            ):
-                out[name] = np.asarray(t[i], dtype=np.int64)
-            out["glyph"] = list(t[4])
-            out["conf"] = np.asarray(t[5], dtype=np.float64)
-            out["choices"] = [
-                [{"glyph": g, "conf": c} for g, c in alts] for alts in t[6]
-            ]
-            cols = list(id_cols) + [
-                "para_id", "line_id", "word_id", "symbol_id", "glyph", "conf", "choices",
-            ]
-            yield pd.DataFrame(out)[cols]
+    def rows_for_batch(pdf):
+        return [raster_symbols(p, wl, k)[1] for p in pdf[payload_col]]
 
-    return pages.select(*id_cols, payload_col).mapInPandas(gen, schema=schema)
-
-
-OCR_SYMBOL_ATTR_FIELDS = (
-    "para_id long, line_id long, word_id long, symbol_id long, glyph string, "
-    "left long, top long, right long, bottom long, "
-    "is_superscript boolean, is_subscript boolean, is_dropcap boolean"
-)
+    return _map_pages(pages, id_cols, payload_col, OCR_SYMBOL_FIELDS, rows_for_batch)
 
 
 def ocr_symbol_attrs(
@@ -220,41 +205,14 @@ def ocr_symbol_attrs(
     (symbol_is_superscript/_subscript/_dropcap,
     /root/reference/src/result_iterator.rs:171-203) with per-component
     pixel boxes."""
-    cfg = cfg or ExtractConfig()
-    wl = cfg.char_whitelist
-    schema = _id_schema(pages, id_cols) + ", " + OCR_SYMBOL_ATTR_FIELDS
-    id_cols = tuple(id_cols)
-    names = [
-        "para_id", "line_id", "word_id", "symbol_id", "glyph",
-        "left", "top", "right", "bottom",
-        "is_superscript", "is_subscript", "is_dropcap",
-    ]
+    wl = (cfg or ExtractConfig()).char_whitelist
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            per_doc = [raster_symbol_attrs(p, wl)[1] for p in pdf[payload_col]]
-            counts = np.fromiter(
-                (len(r) for r in per_doc), dtype=np.int64, count=len(per_doc)
-            )
-            out: dict = {
-                c: np.repeat(pdf[c].to_numpy(), counts) for c in id_cols
-            }
-            rows: list = []
-            for r in per_doc:
-                rows.extend(r)
-            t = list(zip(*rows)) if rows else [[]] * len(names)
-            for i, name in enumerate(names):
-                if name == "glyph":
-                    out[name] = list(t[i])
-                elif name.startswith("is_"):
-                    out[name] = np.asarray(t[i], dtype=bool)
-                else:
-                    out[name] = np.asarray(t[i], dtype=np.int64)
-            yield pd.DataFrame(out)[list(id_cols) + names]
+    def rows_for_batch(pdf):
+        return [raster_symbol_attrs(p, wl)[1] for p in pdf[payload_col]]
 
-    return pages.select(*id_cols, payload_col).mapInPandas(gen, schema=schema)
+    return _map_pages(
+        pages, id_cols, payload_col, OCR_SYMBOL_ATTR_FIELDS, rows_for_batch
+    )
 
 
 def word_font_attributes(words: DataFrame, source_dpi: int = 96) -> DataFrame:
@@ -287,36 +245,11 @@ def ocr_layout(
     """Paragraph-level layout analysis without recognition — the
     analyse_layout / init_for_analyse_page surface
     (/root/reference/src/api.rs:1353-1364, 774-781)."""
-    schema = _id_schema(pages, id_cols) + ", " + OCR_LAYOUT_FIELDS
-    id_cols = tuple(id_cols)
-    names = [
-        "para_id", "n_lines", "n_words", "left", "top", "right", "bottom",
-        "block_type", "justification", "first_line_indent",
-    ]
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            per_doc = [raster_layout_blocks(p)[1] for p in pdf[payload_col]]
-            counts = np.fromiter(
-                (len(r) for r in per_doc), dtype=np.int64, count=len(per_doc)
-            )
-            out: dict = {
-                c: np.repeat(pdf[c].to_numpy(), counts) for c in id_cols
-            }
-            rows: list = []
-            for r in per_doc:
-                rows.extend(r)
-            t = list(zip(*rows)) if rows else [[]] * len(names)
-            for i, name in enumerate(names):
-                if name in ("block_type", "justification"):
-                    out[name] = list(t[i])
-                else:
-                    out[name] = np.asarray(t[i], dtype=np.int64)
-            yield pd.DataFrame(out)[list(id_cols) + names]
+    def rows_for_batch(pdf):
+        return [raster_layout_blocks(p)[1] for p in pdf[payload_col]]
 
-    return pages.select(*id_cols, payload_col).mapInPandas(gen, schema=schema)
+    return _map_pages(pages, id_cols, payload_col, OCR_LAYOUT_FIELDS, rows_for_batch)
 
 
 def ocr_thresholded(
@@ -327,27 +260,13 @@ def ocr_thresholded(
     """Binarized-page debug surface (get_thresholded_image +
     scale factor, /root/reference/src/api.rs:445-456, 825-831):
     (ids..., status, threshold, scale_factor, width, height, bits)."""
-    schema = _id_schema(pages, id_cols) + (
-        ", status string, threshold long, scale_factor long, "
-        "width long, height long, bits binary"
+
+    def rows_for_batch(pdf):
+        return [[thresholded_image(p)] for p in pdf[payload_col]]
+
+    return _map_pages(
+        pages, id_cols, payload_col, OCR_THRESHOLD_FIELDS, rows_for_batch
     )
-    id_cols = tuple(id_cols)
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            res = [thresholded_image(p) for p in pdf[payload_col]]
-            out = {c: pdf[c].to_numpy() for c in id_cols}
-            out["status"] = [r[0] for r in res]
-            out["threshold"] = pd.array([r[1] for r in res], dtype="int64")
-            out["scale_factor"] = pd.array([r[2] for r in res], dtype="int64")
-            out["width"] = pd.array([r[3] for r in res], dtype="int64")
-            out["height"] = pd.array([r[4] for r in res], dtype="int64")
-            out["bits"] = [r[5] for r in res]
-            yield pd.DataFrame(out)
-
-    return pages.select(*id_cols, payload_col).mapInPandas(gen, schema=schema)
 
 
 def ocr_words(
@@ -361,53 +280,18 @@ def ocr_words(
     the word_recognition_language channel
     (/root/reference/src/result_iterator.rs:78-89)."""
     cfg = cfg or ExtractConfig()
-    langs = cfg.langs
-    schema = _id_schema(pages, id_cols) + ", " + OCR_WORD_FIELDS
-    if include_lang:
-        schema += ", word_lang string"
-    schema += ", page_width long, page_height long"
-    id_cols = tuple(id_cols)
-    keys = (
-        "block_id", "para_id", "line_id", "word_id", "word", "conf",
-        "left", "top", "right", "bottom", "baseline_y",
-    ) + (("word_lang",) if include_lang else ())
+    fields = OCR_WORD_FIELDS + (", word_lang string" if include_lang else "")
+    # page dims on every word row: the coordinate frame for
+    # bottom-left-origin box renderers
+    fields += ", page_width long, page_height long"
+    # kernel word tuples: the 11 OCR_WORD_FIELDS, then the winning language
+    head = itemgetter(slice(0, 12 if include_lang else 11))
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            # vectorized explode: one C-speed list.extend per doc, ONE
-            # zip-transpose per batch, np.repeat for the id columns
-            docs = raster_batch_results(pdf, cfg, payload_col, langs=langs)
-            counts = np.fromiter(
-                (len(r.words) for r in docs), dtype=np.int64, count=len(docs)
-            )
-            out: dict = {
-                c: np.repeat(pdf[c].to_numpy(), counts) for c in id_cols
-            }
-            rows: list = []
-            for r in docs:
-                rows.extend(r.words)
-            t = list(zip(*rows)) if rows else [[]] * len(keys)
-            for i, k in enumerate(keys):
-                if k in ("word", "word_lang"):
-                    out[k] = list(t[i])
-                elif k == "conf":
-                    out[k] = np.asarray(t[i], dtype=np.float64)
-                else:
-                    out[k] = np.asarray(t[i], dtype=np.int64)
-            # page dims: per-doc values repeated per word (the coordinate
-            # frame for bottom-left-origin box renderers)
-            out["page_width"] = np.repeat(
-                np.fromiter((r.page_width for r in docs), np.int64, len(docs)),
-                counts,
-            )
-            out["page_height"] = np.repeat(
-                np.fromiter((r.page_height for r in docs), np.int64, len(docs)),
-                counts,
-            )
-            yield pd.DataFrame(out)[
-                list(id_cols) + list(keys) + ["page_width", "page_height"]
-            ]
+    def rows_for_batch(pdf):
+        # builtin map/itemgetter/add: the per-word tuple stays in C
+        return [
+            list(map(add, map(head, r.words), repeat((r.page_width, r.page_height))))
+            for r in raster_batch_results(pdf, cfg, payload_col)
+        ]
 
-    return pages.select(*id_cols, payload_col).mapInPandas(gen, schema=schema)
+    return _map_pages(pages, id_cols, payload_col, fields, rows_for_batch)

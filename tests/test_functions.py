@@ -75,6 +75,32 @@ def test_dedup_keep_first_survivors(spark, docs):
     assert res.filter(F.col("doc_id") >= 100000).count() == 0
 
 
+def test_dedup_keep_first_all_null_ids(spark):
+    """A digest group whose ids are all NULL still keeps its payload row
+    (min_by over a NULL ordering value alone would return a NULL row)."""
+    from tesseract_rs_spark.functions.dedup import dedup_keep_first
+
+    docs = spark.createDataFrame(
+        [(None, "same text"), (None, "same text"), (7, "other text")],
+        "doc_id long, text string",
+    )
+    got = {(r["doc_id"], r["text"]) for r in dedup_keep_first(docs).collect()}
+    assert got == {(None, "same text"), (7, "other text")}
+
+
+def test_dedup_keep_first_null_id_sorts_first(spark):
+    """NULLS-FIRST survivor semantics: in a group mixing NULL and non-NULL
+    ids the NULL-id row survives, as ``ORDER BY id`` would pick it."""
+    from tesseract_rs_spark.functions.dedup import dedup_keep_first
+
+    docs = spark.createDataFrame(
+        [(3, "dup", "a"), (None, "dup", "b"), (1, "dup", "c")],
+        "doc_id long, text string, tag string",
+    )
+    got = [(r["doc_id"], r["tag"]) for r in dedup_keep_first(docs).collect()]
+    assert got == [(None, "b")]
+
+
 def test_curate_single_shuffle(spark, docs):
     """The composed curation pipeline must pay exactly ONE exchange (the
     digest shuffle of the dedup) — signals and filters stay inside the
@@ -2097,6 +2123,22 @@ def test_simhash_arrow_edges(spark):
         ).collect()
     }
     assert rev == out
+    # large Arrow var types ship the digests as large_binary (int64
+    # offsets): same fingerprints
+    key = "spark.sql.execution.arrow.useLargeVarTypes"
+    prev = spark.conf.get(key, None)
+    spark.conf.set(key, "true")
+    try:
+        large = {
+            r["url"]: r["simhash"]
+            for r in simhash(docs, id_col="url").collect()
+        }
+    finally:
+        if prev is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prev)
+    assert large == out
 
 
 def test_stratified_token_budget_empty_nonstring_stratum(spark):

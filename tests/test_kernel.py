@@ -215,27 +215,3 @@ class TestHierarchy:
             assert 0 <= s < e  # span invariant (bbox l<r analog,
             # tests/test_iterators.rs:179-193)
         assert 0 <= r.mean_conf <= 100
-
-
-def test_word_columns_matches_word_rows():
-    """The vectorized columnar explode must agree with the row explode."""
-    import numpy as np
-
-    from tesseract_rs_spark.corpus import render_html
-    from tesseract_rs_spark.kernels.html import word_columns
-
-    r = extract_doc(render_html("alpha beta gamma " * 30, 7, "en").encode(), ExtractConfig())
-    rows = word_rows(r)
-    words, block, para, line, wid, conf, s, e = word_columns(r)
-    assert words == [x[4] for x in rows]
-    assert block.tolist() == [x[0] for x in rows]
-    assert para.tolist() == [x[1] for x in rows]
-    assert line.tolist() == [x[2] for x in rows]
-    assert wid.tolist() == [x[3] for x in rows]
-    assert np.allclose(conf, [x[5] for x in rows])
-    assert s.tolist() == [x[6] for x in rows]
-    assert e.tolist() == [x[7] for x in rows]
-    # empty doc -> empty arrays, no crash
-    empty = extract_doc(b"<html><body></body></html>", ExtractConfig())
-    w2, *cols2 = word_columns(empty)
-    assert w2 == [] and all(len(c) == 0 for c in cols2)

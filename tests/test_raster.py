@@ -304,3 +304,91 @@ def test_flat_bottom_baseline_equals_fit():
             sloped[:, 3] = bottom + np.arange(n)
             assert int(sloped[:, 3].max()) != int(sloped[:, 3].min())
             assert isinstance(fit_baseline(sloped), int)
+
+
+def _good_page_rows(surface):
+    """The good page's expected rows straight from the kernels (ids
+    excluded), in each surface's DDL order."""
+    from tesseract_rs_spark.kernels.raster import (
+        raster_layout_blocks,
+        raster_symbol_attrs,
+        raster_symbols,
+    )
+
+    page = render_page(TEXT)
+    if surface.startswith("ocr_words"):
+        r = extract_raster_doc(page)
+        n = 12 if surface == "ocr_words_lang" else 11  # word_lang is 12th
+        return [w[:n] + (r.page_width, r.page_height) for w in r.words]
+    return {
+        "ocr_symbols": lambda: raster_symbols(page)[1],
+        "ocr_symbol_attrs": lambda: raster_symbol_attrs(page)[1],
+        "ocr_layout": lambda: raster_layout_blocks(page)[1],
+    }[surface]()
+
+
+@pytest.mark.parametrize(
+    "surface",
+    [
+        "ocr_text", "ocr_osd", "ocr_thresholded",  # one status row per page
+        "ocr_words", "ocr_words_lang", "ocr_symbols", "ocr_symbol_attrs",
+        "ocr_layout",  # zero or more rows per page
+    ],
+)
+def test_raster_surfaces_on_corrupt_pages(spark, surface):
+    """Every raster surface on one good page, a bad-magic payload and an
+    empty payload, two records per Arrow batch in one partition — so the
+    second batch holds ONLY bad pages.  The output schema is the declared
+    DDL; scalar surfaces emit one status row per page; exploded surfaces
+    emit nothing for the bad pages and exactly the kernel's rows for the
+    good one."""
+    from pyspark.sql.types import DataType
+
+    from tesseract_rs_spark.operators import ocr
+
+    pages = spark.createDataFrame(
+        [
+            ("good", bytearray(render_page(TEXT))),
+            ("bad_magic", bytearray(b"\x00" * 64)),
+            ("empty", bytearray(b"")),
+        ],
+        "url string, html binary",
+    ).coalesce(1)
+    words_ddl = ocr.OCR_WORD_FIELDS + "{}, page_width long, page_height long"
+    call, fields = {
+        "ocr_text": (ocr.ocr_text, ocr.OCR_TEXT_FIELDS),
+        "ocr_osd": (ocr.ocr_osd, ocr.OCR_OSD_FIELDS),
+        "ocr_thresholded": (
+            ocr.ocr_thresholded,
+            "status string, threshold long, scale_factor long, "
+            "width long, height long, bits binary",
+        ),
+        "ocr_words": (ocr.ocr_words, words_ddl.format("")),
+        "ocr_words_lang": (
+            lambda p: ocr.ocr_words(p, include_lang=True),
+            words_ddl.format(", word_lang string"),
+        ),
+        "ocr_symbols": (ocr.ocr_symbols, ocr.OCR_SYMBOL_FIELDS),
+        "ocr_symbol_attrs": (ocr.ocr_symbol_attrs, ocr.OCR_SYMBOL_ATTR_FIELDS),
+        "ocr_layout": (ocr.ocr_layout, ocr.OCR_LAYOUT_FIELDS),
+    }[surface]
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "2")
+    try:
+        out = call(pages)
+        rows = out.collect()
+    finally:
+        spark.conf.set(key, prev)
+    assert out.schema == DataType.fromDDL("url string, " + fields)
+    if surface in ("ocr_text", "ocr_osd", "ocr_thresholded"):
+        assert sorted((r["url"], r["status"]) for r in rows) == [
+            ("bad_magic", "invalid_image_data"),
+            ("empty", "invalid_image_data"),
+            ("good", "ok"),
+        ]
+    else:
+        assert {r["url"] for r in rows} == {"good"}
+        want = _good_page_rows(surface)
+        assert want
+        assert sorted(tuple(r)[1:] for r in rows) == sorted(want)
