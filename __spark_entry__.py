@@ -62,6 +62,7 @@ from tesseract_rs_spark.functions.cleaning import (
     dedup_paragraphs,
     pii_scrub,
 )
+from tesseract_rs_spark.operators.boundary import map_each, map_rows
 from tesseract_rs_spark.operators.extract import extract_text, extract_words
 from tesseract_rs_spark.operators.multipage import process_pages
 from tesseract_rs_spark.operators.ocr import (
@@ -519,55 +520,37 @@ def _q_engine_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     791-818 via ``with_config_text`` — comments and blank lines skipped,
     typed knobs mirrored): a per-doc config text loads a whitelist and
     the preserve flag, emitted as cfg_whitelist/cfg_preserve."""
-    import pandas as pd
-
     from tesseract_rs_spark import __version__
     from tesseract_rs_spark.kernels.raster import CHARSET, LANG_ATLASES
 
-    docs = _docs(spark, sf_dir).select("doc_id")
+    docs = _docs(spark, sf_dir).select(F.col("doc_id").cast("long").alias("doc_id"))
     langs = "+".join(sorted(LANG_ATLASES))
     charset_n = len(CHARSET)
 
-    def gen(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids = pdf["doc_id"].astype("int64")
-            dpis, dumps, wls, press = [], [], [], []
-            for d in ids:
-                cfg = ExtractConfig().with_variable(
-                    "source_resolution", str(70 + (int(d) % 4) * 10)
-                )
-                dpis.append(int(cfg.get_variable("source_resolution")))
-                dumps.append(cfg.print_variables())
-                cfg2 = ExtractConfig().with_config_text(
-                    "# engine knobs (comment line must be skipped)\n"
-                    "\n"
-                    f"tessedit_char_whitelist ab{int(d) % 10}\n"
-                    "preserve_interword_spaces 1\n"
-                )
-                wls.append(cfg2.char_whitelist)
-                press.append(cfg2.preserve_interword_spaces)
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "dpi": pd.array(dpis, dtype="int64"),
-                    "var_dump": dumps,
-                    "version": __version__,
-                    "embedded_langs": langs,
-                    "charset_size": pd.array(
-                        [charset_n] * len(ids), dtype="int64"
-                    ),
-                    "cfg_whitelist": wls,
-                    "cfg_preserve": pd.array(press, dtype="bool"),
-                }
-            )
+    def manifest_row(d):
+        cfg = ExtractConfig().with_variable(
+            "source_resolution", str(70 + (int(d) % 4) * 10)
+        )
+        cfg2 = ExtractConfig().with_config_text(
+            "# engine knobs (comment line must be skipped)\n"
+            "\n"
+            f"tessedit_char_whitelist ab{int(d) % 10}\n"
+            "preserve_interword_spaces 1\n"
+        )
+        return (
+            int(cfg.get_variable("source_resolution")), cfg.print_variables(),
+            __version__, langs, charset_n, cfg2.char_whitelist,
+            cfg2.preserve_interword_spaces,
+        )
 
-    return docs.mapInPandas(
-        gen,
-        "doc_id long, dpi long, var_dump string, version string, "
-        "embedded_langs string, charset_size long, "
-        "cfg_whitelist string, cfg_preserve boolean",
+    def rows_for_batch(pdf):
+        return [[manifest_row(d)] for d in pdf["doc_id"]]
+
+    return map_rows(
+        docs, ("doc_id",), (),
+        "dpi long, var_dump string, version string, embedded_langs string, "
+        "charset_size long, cfg_whitelist string, cfg_preserve boolean",
+        rows_for_batch,
     )
 
 
@@ -675,37 +658,18 @@ def _q_ocr_thresholded(spark, sf_dir):
     between-class-variance plateau), dims follow the shared geometry, and
     the bit popcount equals the closed-form glyph ink mass."""
     import numpy as np
-    import pandas as pd
 
     from tesseract_rs_spark.operators.ocr import ocr_thresholded
 
     pages = raster_pages_from_documents(_docs(spark, sf_dir), WPL, LPP)
     th = ocr_thresholded(pages, id_cols=("doc_id",))
 
-    def gen(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            n_ink = [
-                int(np.unpackbits(np.frombuffer(b, dtype=np.uint8)).sum())
-                for b in pdf["bits"]
-            ]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "status": pdf["status"],
-                    "threshold": pdf["threshold"],
-                    "scale_factor": pdf["scale_factor"],
-                    "width": pdf["width"],
-                    "height": pdf["height"],
-                    "n_ink_px": pd.array(n_ink, dtype="int64"),
-                }
-            )
+    def n_ink(bits):
+        return (int(np.unpackbits(np.frombuffer(bits, dtype=np.uint8)).sum()),)
 
-    return th.mapInPandas(
-        gen,
-        "doc_id long, status string, threshold long, scale_factor long, "
-        "width long, height long, n_ink_px long",
+    return map_each(
+        th, ("doc_id", "status", "threshold", "scale_factor", "width", "height"),
+        ("bits",), "n_ink_px long", n_ink,
     )
 
 
@@ -808,8 +772,6 @@ def _q_ocr_symbol_attrs(spark, sf_dir):
 def _q_multipage_text(spark, sf_dir):
     """process_pages analog: documents split into two half-word pages,
     extracted independently, reassembled with '\\f' in page order."""
-    import pandas as pd
-
     docs = _docs(spark, sf_dir)
     toks = F.split("text", " ")
     half = F.ceil(F.size(toks) / 2).cast("int")
@@ -829,26 +791,24 @@ def _q_multipage_text(spark, sf_dir):
     # n_pages matches the SQL page-split (which never emits an empty page)
     split_pages = p0.unionByName(p1).filter(F.col("ptext") != "")
 
-    def gen(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].astype("int64"),
-                    "page_num": pdf["page_num"].astype("int64"),
-                    "html": [
-                        render_html(
-                            t, int(d) * 2 + int(p), l, para_words=_SINGLE_PARA
-                        ).encode("utf-8")
-                        for d, p, t, l in zip(
-                            pdf["doc_id"], pdf["page_num"], pdf["ptext"], pdf["lang"]
-                        )
-                    ],
-                }
-            )
+    split_pages = split_pages.select(
+        F.col("doc_id").cast("long").alias("doc_id"),
+        F.col("page_num").cast("long").alias("page_num"), "ptext", "lang",
+    )
 
-    pages = split_pages.mapInPandas(gen, "doc_id long, page_num long, html binary")
+    def rows_for_batch(pdf):
+        rows = []
+        for d, p, t, l in zip(
+            pdf["doc_id"], pdf["page_num"], pdf["ptext"], pdf["lang"]
+        ):
+            html = render_html(t, int(d) * 2 + int(p), l, para_words=_SINGLE_PARA)
+            rows.append([(html.encode("utf-8"),)])
+        return rows
+
+    pages = map_rows(
+        split_pages, ("doc_id", "page_num"), ("ptext", "lang"), "html binary",
+        rows_for_batch,
+    )
     return process_pages(pages, key="doc_id").select("doc_id", "text", "n_pages")
 
 
@@ -1092,28 +1052,17 @@ def _media_pgm(spark, sf_dir):
     """Each document rendered to a raster page and encoded as a binary
     PGM (P5) — the shared image-media frame for the stats and resize
     branches."""
-    import pandas as pd
-
     from tesseract_rs_spark.functions.multimodal import pgm_encode
     from tesseract_rs_spark.kernels.raster import decode_page, render_page
 
-    docs = _docs(spark, sf_dir)
-
-    def gen(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            payloads = [
-                pgm_encode(decode_page(render_page(t, WPL, LPP))[0])
-                for t in pdf["text"]
-            ]
-            yield pd.DataFrame(
-                {"media_id": pdf["doc_id"].astype("int64"), "payload": payloads}
-            )
-
-    return docs.select("doc_id", "text").mapInPandas(
-        gen, "media_id long, payload binary"
+    docs = _docs(spark, sf_dir).select(
+        F.col("doc_id").cast("long").alias("media_id"), "text"
     )
+
+    def row(t):
+        return (pgm_encode(decode_page(render_page(t, WPL, LPP))[0]),)
+
+    return map_each(docs, ("media_id",), ("text",), "payload binary", row)
 
 
 def _q_media_audio_stats(spark, sf_dir):
@@ -1122,26 +1071,22 @@ def _q_media_audio_stats(spark, sf_dir):
     500) are encoded into a real RIFF/WAVE container, decoded back by the
     real parser, and reduced to exact-integer statistics."""
     import numpy as np
-    import pandas as pd
 
     from tesseract_rs_spark.functions.multimodal import audio_stats, wav_encode
 
-    docs = _docs(spark, sf_dir)
+    docs = _docs(spark, sf_dir).select(
+        F.col("doc_id").cast("long").alias("media_id")
+    )
 
-    def gen(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            payloads = []
-            for did in pdf["doc_id"].astype("int64"):
-                n = 1000 + int(did) % 500
-                s = (int(did) * 31 + 17 * np.arange(n, dtype=np.int64)) % 2003 - 1001
-                payloads.append(wav_encode(s.astype(np.int16), 16000))
-            yield pd.DataFrame(
-                {"media_id": pdf["doc_id"].astype("int64"), "payload": payloads}
-            )
+    def rows_for_batch(pdf):
+        rows = []
+        for did in pdf["media_id"]:
+            n = 1000 + int(did) % 500
+            s = (int(did) * 31 + 17 * np.arange(n, dtype=np.int64)) % 2003 - 1001
+            rows.append([(wav_encode(s.astype(np.int16), 16000),)])
+        return rows
 
-    media = docs.select("doc_id").mapInPandas(gen, "media_id long, payload binary")
+    media = map_rows(docs, ("media_id",), (), "payload binary", rows_for_batch)
     return audio_stats(media).select(
         F.col("media_id").alias("doc_id"), "status", "sample_rate",
         "n_samples", "sumsq", "peak", "zero_crossings",
@@ -1153,28 +1098,21 @@ def _q_media_video_stats(spark, sf_dir):
     rendered page becomes (1 + doc_id % 4) identical PGM frames in a VSEQ
     payload; the query parses the header and REALLY decodes frame 0.
     n_frames, dims, and frame ink mass are all closed-form."""
-    import pandas as pd
-
     from tesseract_rs_spark.functions.multimodal import video_encode, video_stats
     from tesseract_rs_spark.kernels.raster import decode_page, render_page
 
-    docs = _docs(spark, sf_dir)
-
-    def gen(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            payloads = []
-            for did, t in zip(pdf["doc_id"].astype("int64"), pdf["text"]):
-                img = decode_page(render_page(t, WPL, LPP))[0]
-                payloads.append(video_encode([img] * (1 + int(did) % 4)))
-            yield pd.DataFrame(
-                {"media_id": pdf["doc_id"].astype("int64"), "payload": payloads}
-            )
-
-    media = docs.select("doc_id", "text").mapInPandas(
-        gen, "media_id long, payload binary"
+    docs = _docs(spark, sf_dir).select(
+        F.col("doc_id").cast("long").alias("media_id"), "text"
     )
+
+    def rows_for_batch(pdf):
+        rows = []
+        for did, t in zip(pdf["media_id"], pdf["text"]):
+            img = decode_page(render_page(t, WPL, LPP))[0]
+            rows.append([(video_encode([img] * (1 + int(did) % 4)),)])
+        return rows
+
+    media = map_rows(docs, ("media_id",), ("text",), "payload binary", rows_for_batch)
     return video_stats(media).select(
         F.col("media_id").alias("doc_id"),
         "status",
@@ -1209,7 +1147,6 @@ def _q_media_decode(spark, sf_dir):
     PGM image, a real PCM WAV, a real VSEQ video, or junk bytes — each
     branch's (width, height, n_frames, status) is closed-form."""
     import numpy as np
-    import pandas as pd
 
     from tesseract_rs_spark.functions.multimodal import (
         MEDIA_MAGIC,
@@ -1222,46 +1159,33 @@ def _q_media_decode(spark, sf_dir):
 
     import struct as _struct
 
-    docs = _docs(spark, sf_dir)
+    docs = _docs(spark, sf_dir).select(
+        F.col("doc_id").cast("long").alias("media_id"), "text"
+    )
 
-    def gen(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids, kinds, payloads = [], [], []
-            for did, t in zip(pdf["doc_id"].astype("int64"), pdf["text"]):
-                did = int(did)
-                case = did % 5
-                if case == 0:
-                    w, h, fr = 16 + did % 200, 16 + did % 100, 1 + did % 30
-                    kinds.append("container")
-                    payloads.append(
-                        MEDIA_MAGIC + _struct.pack("<iiiii", w, h, 8000, 1000, fr)
-                    )
-                elif case == 1:
-                    kinds.append("image")
-                    payloads.append(
-                        pgm_encode(decode_page(render_page(t, WPL, LPP))[0])
-                    )
-                elif case == 2:
-                    n = 100 + did % 50
-                    s = (did * 31 + 17 * np.arange(n, dtype=np.int64)) % 2003 - 1001
-                    kinds.append("audio")
-                    payloads.append(wav_encode(s.astype(np.int16), 16000))
-                elif case == 3:
-                    img = decode_page(render_page(t, WPL, LPP))[0]
-                    kinds.append("video")
-                    payloads.append(video_encode([img] * (1 + did % 3)))
-                else:
-                    kinds.append("image")
-                    payloads.append(b"JUNK" + did.to_bytes(4, "big"))
-                ids.append(did)
-            yield pd.DataFrame(
-                {"media_id": ids, "kind": kinds, "payload": payloads}
-            )
+    def media_row(did, t):
+        did = int(did)
+        case = did % 5
+        if case == 0:
+            w, h, fr = 16 + did % 200, 16 + did % 100, 1 + did % 30
+            head = _struct.pack("<iiiii", w, h, 8000, 1000, fr)
+            return "container", MEDIA_MAGIC + head
+        if case == 1:
+            return "image", pgm_encode(decode_page(render_page(t, WPL, LPP))[0])
+        if case == 2:
+            n = 100 + did % 50
+            s = (did * 31 + 17 * np.arange(n, dtype=np.int64)) % 2003 - 1001
+            return "audio", wav_encode(s.astype(np.int16), 16000)
+        if case == 3:
+            img = decode_page(render_page(t, WPL, LPP))[0]
+            return "video", video_encode([img] * (1 + did % 3))
+        return "image", b"JUNK" + did.to_bytes(4, "big")
 
-    media = docs.select("doc_id", "text").mapInPandas(
-        gen, "media_id long, kind string, payload binary"
+    def rows_for_batch(pdf):
+        return [[media_row(d, t)] for d, t in zip(pdf["media_id"], pdf["text"])]
+
+    media = map_rows(
+        docs, ("media_id",), ("text",), "kind string, payload binary", rows_for_batch
     )
     return decode_media(media).select(
         F.col("media_id").alias("doc_id"),

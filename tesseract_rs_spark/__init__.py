@@ -15,8 +15,10 @@ pipeline over Common-Crawl-style page tables
 - never fail a job on one corrupt page: per-row status + failure spans
   (error model: /root/reference/src/error.rs:6-41).
 
-Everything executes as Arrow-vectorized ``mapInPandas`` stages — zero
-per-row Python UDFs.
+Everything executes as Arrow-vectorized ``mapInPandas`` / ``mapInArrow``
+stages — zero per-row Python UDFs.  The raster OCR, media and image-PDF
+surfaces cross the JVM<->Python boundary through one shared row mapper,
+``operators/boundary.py``.
 """
 
 __version__ = "0.1.0"

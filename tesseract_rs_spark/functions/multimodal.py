@@ -24,15 +24,28 @@ from __future__ import annotations
 
 import hashlib
 import struct
-from typing import Iterator
 
 import numpy as np
 import pandas as pd
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
+
+from tesseract_rs_spark.operators.boundary import map_each
 
 MEDIA_MAGIC = b"MEDI"
 KINDS = ("image", "audio", "video")
+
+IMAGE_STATS_FIELDS = (
+    "status string, width long, height long, n_ink_px long, sum_px long"
+)
+AUDIO_STATS_FIELDS = (
+    "status string, sample_rate long, n_samples long, sumsq long, peak long, "
+    "zero_crossings long"
+)
+VIDEO_STATS_FIELDS = (
+    "status string, n_frames long, width long, height long, n_ink_px long"
+)
+DECODE_MEDIA_FIELDS = "width long, height long, n_frames long, status string"
 
 MEDIA_SCHEMA = (
     "media_id long, kind string, payload binary, "
@@ -209,36 +222,16 @@ def image_stats(media: DataFrame, id_col: str = "media_id", col: str = "payload"
     pixel sum."""
     from tesseract_rs_spark.kernels.raster import INK
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, status, ws, hs, ink, sums = [], [], [], [], [], []
-            for mid, payload in zip(pdf[id_col], pdf[col]):
-                img, st = decode_image(payload)
-                ids.append(mid)
-                status.append(st)
-                if img is None:
-                    ws.append(0), hs.append(0), ink.append(0), sums.append(0)
-                else:
-                    ws.append(img.shape[1])
-                    hs.append(img.shape[0])
-                    ink.append(int((img == INK).sum()))
-                    sums.append(int(img.sum(dtype=np.int64)))
-            yield pd.DataFrame(
-                {
-                    id_col: ids,
-                    "status": status,
-                    "width": pd.array(ws, dtype="int64"),
-                    "height": pd.array(hs, dtype="int64"),
-                    "n_ink_px": pd.array(ink, dtype="int64"),
-                    "sum_px": pd.array(sums, dtype="int64"),
-                }
-            )
+    def row(payload):
+        img, st = decode_image(payload)
+        if img is None:
+            return st, 0, 0, 0, 0
+        return (
+            st, img.shape[1], img.shape[0], int((img == INK).sum()),
+            int(img.sum(dtype=np.int64)),
+        )
 
-    return media.select(id_col, col).mapInPandas(
-        gen,
-        schema=f"{id_col} long, status string, width long, height long, "
-        "n_ink_px long, sum_px long",
-    )
+    return map_each(media, (id_col,), (col,), IMAGE_STATS_FIELDS, row)
 
 
 def audio_stats(media: DataFrame, id_col: str = "media_id", col: str = "payload") -> DataFrame:
@@ -246,35 +239,15 @@ def audio_stats(media: DataFrame, id_col: str = "media_id", col: str = "payload"
     (id, status, sample_rate, n_samples, sumsq, peak, zero_crossings) —
     all exact integers, so cross-engine comparison is byte-stable."""
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf[id_col], pdf[col]):
-                s, sr, st = decode_audio(payload)
-                if s is None or len(s) == 0:
-                    rows.append((mid, st, sr, 0, 0, 0, 0))
-                else:
-                    s64 = s.astype(np.int64)
-                    zc = int(((s64[:-1] >= 0) != (s64[1:] >= 0)).sum())
-                    rows.append(
-                        (
-                            mid,
-                            st,
-                            sr,
-                            len(s),
-                            int((s64 * s64).sum()),
-                            int(np.abs(s64).max()),
-                            zc,
-                        )
-                    )
-            cols = [id_col, "status", "sample_rate", "n_samples", "sumsq", "peak", "zero_crossings"]
-            yield pd.DataFrame(rows, columns=cols)
+    def row(payload):
+        s, sr, st = decode_audio(payload)
+        if s is None or len(s) == 0:
+            return st, sr, 0, 0, 0, 0
+        s64 = s.astype(np.int64)
+        zc = int(((s64[:-1] >= 0) != (s64[1:] >= 0)).sum())
+        return st, sr, len(s), int((s64 * s64).sum()), int(np.abs(s64).max()), zc
 
-    return media.select(id_col, col).mapInPandas(
-        gen,
-        schema=f"{id_col} long, status string, sample_rate long, "
-        "n_samples long, sumsq long, peak long, zero_crossings long",
-    )
+    return map_each(media, (id_col,), (col,), AUDIO_STATS_FIELDS, row)
 
 
 def media_header(payload) -> tuple:
@@ -318,90 +291,44 @@ def video_stats(
     the whole row is SQL-oracle-able."""
     from tesseract_rs_spark.kernels.raster import INK
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf[id_col], pdf[col]):
-                buf = bytes(payload) if payload is not None else b""
-                if buf[:4] != b"VSEQ" or len(buf) < 8:
-                    rows.append((mid, "unsupported_codec", 0, 0, 0, 0))
-                    continue
-                (n,) = struct.unpack_from("<I", buf, 4)
-                img, st = decode_frame(buf, frame)
-                if img is None:
-                    rows.append((mid, st, n, 0, 0, 0))
-                    continue
-                rows.append(
-                    (
-                        mid,
-                        "ok",
-                        n,
-                        img.shape[1],
-                        img.shape[0],
-                        int((img == INK).sum()),
-                    )
-                )
-            cols = [id_col, "status", "n_frames", "width", "height", "n_ink_px"]
-            yield pd.DataFrame(rows, columns=cols)
+    def row(payload):
+        buf = bytes(payload) if payload is not None else b""
+        if buf[:4] != b"VSEQ" or len(buf) < 8:
+            return "unsupported_codec", 0, 0, 0, 0
+        (n,) = struct.unpack_from("<I", buf, 4)
+        img, st = decode_frame(buf, frame)
+        if img is None:
+            return st, n, 0, 0, 0
+        return "ok", n, img.shape[1], img.shape[0], int((img == INK).sum())
 
-    return media.select(id_col, col).mapInPandas(
-        gen,
-        schema=f"{id_col} long, status string, n_frames long, width long, "
-        "height long, n_ink_px long",
-    )
+    return map_each(media, (id_col,), (col,), VIDEO_STATS_FIELDS, row)
 
 
 def decode_media(media: DataFrame) -> DataFrame:
     """Parse payload headers -> (media_id, kind, width, height, n_frames,
     status).  STUB: only the synthetic MEDI container is implemented; a
     real deployment would dispatch to PIL/ffmpeg here."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"media_id": pdf["media_id"], "kind": pdf["kind"]}
-            ws, hs, fs, status = [], [], [], []
-            for payload in pdf["payload"]:
-                w, h, n, st = media_header(payload)
-                ws.append(w)
-                hs.append(h)
-                fs.append(n)
-                status.append(st)
-            out.update(
-                {
-                    "width": pd.array(ws, dtype="int64"),
-                    "height": pd.array(hs, dtype="int64"),
-                    "n_frames": pd.array(fs, dtype="int64"),
-                    "status": status,
-                }
-            )
-            yield pd.DataFrame(out)
-
-    return media.select("media_id", "kind", "payload").mapInPandas(
-        gen,
-        schema="media_id long, kind string, width long, height long, "
-        "n_frames long, status string",
+    return map_each(
+        media, ("media_id", "kind"), ("payload",), DECODE_MEDIA_FIELDS, media_header
     )
 
 
 def extract_features(media: DataFrame, dim: int = 16) -> DataFrame:
     """(media_id, features array<float>): deterministic sha-seeded stand-in
     for an embedding-model forward pass — the Arrow batch shape, schema,
-    and normalization are the real contract."""
+    and normalization are the real contract.  A NULL payload has NULL
+    features."""
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats = []
-            for payload in pdf["payload"]:
-                digest = hashlib.sha256(bytes(payload)).digest()
-                seed = int.from_bytes(digest[:4], "big")
-                vec = np.random.RandomState(seed).normal(size=dim)
-                vec /= np.linalg.norm(vec)
-                feats.append([float(x) for x in vec])
-            yield pd.DataFrame({"media_id": pdf["media_id"], "features": feats})
+    def row(payload):
+        if payload is None:
+            return (None,)
+        digest = hashlib.sha256(bytes(payload)).digest()
+        seed = int.from_bytes(digest[:4], "big")
+        vec = np.random.RandomState(seed).normal(size=dim)
+        vec /= np.linalg.norm(vec)
+        return (vec.tolist(),)
 
-    return media.select("media_id", "payload").mapInPandas(
-        gen, schema="media_id long, features array<double>"
-    )
+    return map_each(media, ("media_id",), ("payload",), "features array<double>", row)
 
 
 def sample_frames(media: DataFrame, every_k: int = 30) -> DataFrame:
@@ -490,48 +417,15 @@ def resize_images(
             "for area downscaling"
         )
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads, status, ws, hs = [], [], [], []
-            for payload in pdf[col]:
-                img, st = decode_image(payload)
-                if img is None:
-                    payloads.append(None)
-                    status.append(st)
-                    ws.append(0)
-                    hs.append(0)
-                    continue
-                tw, th = (
-                    (out_w, out_h)
-                    if fixed
-                    else (img.shape[1] * scale, img.shape[0] * scale)
-                )
-                try:
-                    payloads.append(pgm_encode(resize_gray(img, tw, th, method)))
-                    status.append("ok")
-                    ws.append(tw)
-                    hs.append(th)
-                except ValueError:
-                    payloads.append(None)
-                    status.append("bad_geometry")
-                    ws.append(0)
-                    hs.append(0)
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    col: payloads,
-                    "width": pd.array(ws, dtype="int64"),
-                    "height": pd.array(hs, dtype="int64"),
-                    "status": status,
-                }
-            )
+    def row(payload):
+        img, st = decode_image(payload)
+        if img is None:
+            return None, 0, 0, st
+        tw, th = (out_w, out_h) if fixed else (img.shape[1] * scale, img.shape[0] * scale)
+        try:
+            return pgm_encode(resize_gray(img, tw, th, method)), tw, th, "ok"
+        except ValueError:
+            return None, 0, 0, "bad_geometry"
 
-    # id keeps its INPUT type like imi_assign derives it — a hardcoded
-    # long would cast string media ids to BIGINT and break at runtime
-    # (ADVICE r6; same latent-bug class as the r5 minhash/lsh fix)
-    id_type = media.schema[id_col].dataType.simpleString()
-    return media.select(id_col, col).mapInPandas(
-        gen,
-        schema=f"{id_col} {id_type}, {col} binary, width long, height long, "
-        "status string",
-    )
+    fields = f"{col} binary, width long, height long, status string"
+    return map_each(media, (id_col,), (col,), fields, row)

@@ -182,7 +182,8 @@ def ocr_text_adapted(
     where they match better, the distributed stand-in for the
     reference's mutated classifier.  (ids, text, status, mean_conf,
     n_words)."""
-    from tesseract_rs_spark.operators.ocr import _map_pages, raster_batch_results
+    from tesseract_rs_spark.operators.boundary import map_rows
+    from tesseract_rs_spark.operators.ocr import raster_batch_results
 
     cfg = cfg or ExtractConfig()
     langs = (*cfg.langs, name)
@@ -196,4 +197,6 @@ def ocr_text_adapted(
             for r in raster_batch_results(pdf, cfg, payload_col, langs=langs)
         ]
 
-    return _map_pages(pages, id_cols, payload_col, OCR_ADAPTED_FIELDS, rows_for_batch)
+    return map_rows(
+        pages, id_cols, (payload_col,), OCR_ADAPTED_FIELDS, rows_for_batch
+    )

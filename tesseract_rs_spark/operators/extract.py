@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame
 
 from tesseract_rs_spark.config import ExtractConfig
 from tesseract_rs_spark.kernels.html import extract_doc
+from tesseract_rs_spark.operators.boundary import id_schema
 
 TEXT_RESULT_FIELDS = (
     "text string, status string, n_blocks long, n_words long, "
@@ -33,11 +34,6 @@ WORD_RESULT_FIELDS = (
     "block_id long, para_id long, line_id long, word_id long, "
     "word string, conf double, span_start long, span_end long"
 )
-
-
-def _id_schema(pages: DataFrame, id_cols: Sequence[str]) -> str:
-    by_name = {f.name: f for f in pages.schema.fields}
-    return ", ".join(f"{c} {by_name[c].dataType.simpleString()}" for c in id_cols)
 
 
 def extract_text_batch(
@@ -134,7 +130,7 @@ def extract_text(
     receives one accumulator add per Arrow batch — the TessMonitor
     progress channel; the deadline channel is ``cfg.page_timeout_ms``."""
     cfg = cfg or ExtractConfig()
-    schema = _id_schema(pages, id_cols) + ", " + (
+    schema = id_schema(pages, id_cols) + ", " + (
         FULL_RESULT_FIELDS if spans else TEXT_RESULT_FIELDS
     )
     id_cols = tuple(id_cols)
@@ -158,7 +154,7 @@ def extract_words(
     word_id, word, conf) in one vectorized stage.  Reading order is encoded
     in the id columns, not in row order (SURVEY.md §3.2)."""
     cfg = cfg or ExtractConfig()
-    schema = _id_schema(pages, id_cols) + ", " + WORD_RESULT_FIELDS
+    schema = id_schema(pages, id_cols) + ", " + WORD_RESULT_FIELDS
     id_cols = tuple(id_cols)
     out_names = list(id_cols) + [
         "block_id", "para_id", "line_id", "word_id", "word", "conf",

@@ -9,13 +9,10 @@ from __future__ import annotations
 
 from itertools import repeat
 from operator import add, itemgetter
-from typing import Callable, Iterator, Sequence
+from typing import Sequence
 
-import numpy as np
-import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
-from pyspark.sql.types import BooleanType, DataType, DoubleType, LongType
 
 from tesseract_rs_spark.config import ExtractConfig
 from tesseract_rs_spark.kernels.raster import (
@@ -25,7 +22,7 @@ from tesseract_rs_spark.kernels.raster import (
     raster_symbols,
     thresholded_image,
 )
-from tesseract_rs_spark.operators.extract import _id_schema
+from tesseract_rs_spark.operators.boundary import map_rows
 
 OCR_TEXT_FIELDS = (
     "text string, status string, threshold long, orientation_deg long, "
@@ -58,60 +55,6 @@ OCR_THRESHOLD_FIELDS = (
     "status string, threshold long, scale_factor long, "
     "width long, height long, bits binary"
 )
-
-# numpy dtype per primitive column type; every other type (string,
-# binary, nested) is handed to Arrow as Python objects
-_NUMPY_DTYPES = {LongType: np.int64, DoubleType: np.float64, BooleanType: bool}
-
-
-def _map_pages(
-    pages: DataFrame,
-    id_cols: Sequence[str],
-    payload_col: str,
-    fields: str,
-    rows_for_batch: Callable[[pd.DataFrame], list],
-) -> DataFrame:
-    """THE raster boundary, shared by every raster surface: ``(id_cols...,
-    fields...)`` from one mapInPandas stage, so a surface is stated once,
-    as its ``*_FIELDS`` DDL plus its row projection.  ``rows_for_batch(pdf)``
-    returns one list of row tuples per page, each tuple in ``fields``
-    order — one row per page for the scalar surfaces, zero or more for
-    the exploded ones.  Column names and dtypes are parsed from
-    ``fields`` once, on the driver; per batch the ids are
-    ``np.repeat``-ed by each page's row count, the rows are gathered with
-    one C-speed ``list.extend`` per page and transposed with ONE ``zip``
-    per batch; a row width that differs from ``fields`` raises instead of
-    shifting columns."""
-    id_cols = tuple(id_cols)
-    schema = DataType.fromDDL(_id_schema(pages, id_cols) + ", " + fields)
-    columns = [
-        (f.name, _NUMPY_DTYPES.get(type(f.dataType)))
-        for f in schema.fields[len(id_cols):]
-    ]
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            per_page = rows_for_batch(pdf)
-            counts = np.fromiter(map(len, per_page), np.int64, len(per_page))
-            out: dict = {c: np.repeat(pdf[c].to_numpy(), counts) for c in id_cols}
-            rows: list = []
-            for r in per_page:
-                rows.extend(r)
-            t = list(zip(*rows)) if rows else [()] * len(columns)
-            for (name, dtype), col in zip(columns, t, strict=True):
-                # object columns stay object even when empty: an empty list
-                # would infer float64, which Arrow cannot convert to a
-                # nested type
-                out[name] = (
-                    pd.Series(col, dtype=object) if dtype is None
-                    else np.asarray(col, dtype)
-                )
-            yield pd.DataFrame(out)
-
-    return pages.select(*id_cols, payload_col).mapInPandas(gen, schema=schema)
-
 
 def raster_batch_results(pdf, cfg: ExtractConfig, payload_col: str = "html",
                          langs: tuple | None = None) -> list:
@@ -148,7 +91,9 @@ def ocr_text(
             for r in raster_batch_results(pdf, cfg, payload_col)
         ]
 
-    return _map_pages(pages, id_cols, payload_col, OCR_TEXT_FIELDS, rows_for_batch)
+    return map_rows(
+        pages, id_cols, (payload_col,), OCR_TEXT_FIELDS, rows_for_batch
+    )
 
 
 def ocr_osd(
@@ -175,7 +120,9 @@ def ocr_osd(
             for r in raster_batch_results(pdf, cfg, payload_col)
         ]
 
-    return _map_pages(pages, id_cols, payload_col, OCR_OSD_FIELDS, rows_for_batch)
+    return map_rows(
+        pages, id_cols, (payload_col,), OCR_OSD_FIELDS, rows_for_batch
+    )
 
 
 def ocr_symbols(
@@ -192,7 +139,9 @@ def ocr_symbols(
     def rows_for_batch(pdf):
         return [raster_symbols(p, wl, k)[1] for p in pdf[payload_col]]
 
-    return _map_pages(pages, id_cols, payload_col, OCR_SYMBOL_FIELDS, rows_for_batch)
+    return map_rows(
+        pages, id_cols, (payload_col,), OCR_SYMBOL_FIELDS, rows_for_batch
+    )
 
 
 def ocr_symbol_attrs(
@@ -210,8 +159,8 @@ def ocr_symbol_attrs(
     def rows_for_batch(pdf):
         return [raster_symbol_attrs(p, wl)[1] for p in pdf[payload_col]]
 
-    return _map_pages(
-        pages, id_cols, payload_col, OCR_SYMBOL_ATTR_FIELDS, rows_for_batch
+    return map_rows(
+        pages, id_cols, (payload_col,), OCR_SYMBOL_ATTR_FIELDS, rows_for_batch
     )
 
 
@@ -249,7 +198,9 @@ def ocr_layout(
     def rows_for_batch(pdf):
         return [raster_layout_blocks(p)[1] for p in pdf[payload_col]]
 
-    return _map_pages(pages, id_cols, payload_col, OCR_LAYOUT_FIELDS, rows_for_batch)
+    return map_rows(
+        pages, id_cols, (payload_col,), OCR_LAYOUT_FIELDS, rows_for_batch
+    )
 
 
 def ocr_thresholded(
@@ -264,8 +215,8 @@ def ocr_thresholded(
     def rows_for_batch(pdf):
         return [[thresholded_image(p)] for p in pdf[payload_col]]
 
-    return _map_pages(
-        pages, id_cols, payload_col, OCR_THRESHOLD_FIELDS, rows_for_batch
+    return map_rows(
+        pages, id_cols, (payload_col,), OCR_THRESHOLD_FIELDS, rows_for_batch
     )
 
 
@@ -294,4 +245,6 @@ def ocr_words(
             for r in raster_batch_results(pdf, cfg, payload_col)
         ]
 
-    return _map_pages(pages, id_cols, payload_col, fields, rows_for_batch)
+    return map_rows(
+        pages, id_cols, (payload_col,), fields, rows_for_batch
+    )

@@ -17,6 +17,8 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
+from tesseract_rs_spark.operators.boundary import map_each
+
 
 # renderer metadata getters (get_extension / get_title / get_image_num,
 # /root/reference/src/result_renderer.rs:141-185)
@@ -638,6 +640,10 @@ def _image_layer(words: DataFrame, pages: DataFrame, key: str) -> DataFrame:
     )
 
 
+# the _image_layer columns each document's PDF is built from
+_LAYER_COLS = ("page_width", "page_height", "_ws", "html")
+
+
 def _image_pdf(pw, ph, ws, payload, title: str):
     """One joined layer row -> (pdf bytes, source gray image | None)."""
     from tesseract_rs_spark.kernels.raster import decode_page
@@ -662,28 +668,14 @@ def render_pdf_with_image(
     words came from (``key`` + ``html`` PAGE-binary).
 
     (key, pdf binary).  Final byte assembly (decode raster -> grayscale
-    -> zlib -> xref arithmetic) is one ``mapInPandas`` over the
+    -> zlib -> xref arithmetic) is one boundary row map over the
     one-row-per-doc :func:`_image_layer` frame."""
-    import pandas as pd
 
-    key_type = words.schema[key].dataType.simpleString()
+    def row(pw, ph, ws, payload):
+        return (_image_pdf(pw, ph, ws, payload, title)[0],)
 
-    def gen(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            outs = [
-                _image_pdf(pw, ph, ws, payload, title)[0]
-                for pw, ph, ws, payload in zip(
-                    pdf["page_width"], pdf["page_height"],
-                    pdf["_ws"], pdf["html"],
-                )
-            ]
-            yield pd.DataFrame({key: pdf[key], "pdf": outs})
-
-    return _image_layer(words, pages, key).mapInPandas(
-        gen, schema=f"{key} {key_type}, pdf binary"
-    )
+    layer = _image_layer(words, pages, key)
+    return map_each(layer, (key,), _LAYER_COLS, "pdf binary", row)
 
 
 def pdf_image_roundtrip_text(
@@ -699,30 +691,18 @@ def pdf_image_roundtrip_text(
     for both halves and the textonly SQL oracle (the golden page
     assembly) stays the oracle for this mode too."""
     import numpy as np
-    import pandas as pd
 
-    key_type = words.schema[key].dataType.simpleString()
+    def row(pw, ph, ws, payload):
+        blob, src = _image_pdf(pw, ph, ws, payload, title)
+        back = extract_pdf_image(blob)
+        ok = (
+            src is None and back is None
+        ) or (
+            src is not None
+            and back is not None
+            and np.array_equal(np.asarray(src, dtype=np.uint8), back)
+        )
+        return (parse_pdf_text(blob) if ok else "IMG_MISMATCH",)
 
-    def gen(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            outs = []
-            for pw, ph, ws, payload in zip(
-                pdf["page_width"], pdf["page_height"], pdf["_ws"], pdf["html"]
-            ):
-                blob, src = _image_pdf(pw, ph, ws, payload, title)
-                back = extract_pdf_image(blob)
-                ok = (
-                    src is None and back is None
-                ) or (
-                    src is not None
-                    and back is not None
-                    and np.array_equal(np.asarray(src, dtype=np.uint8), back)
-                )
-                outs.append(parse_pdf_text(blob) if ok else "IMG_MISMATCH")
-            yield pd.DataFrame({key: pdf[key], "pdf_text": outs})
-
-    return _image_layer(words, pages, key).mapInPandas(
-        gen, schema=f"{key} {key_type}, pdf_text string"
-    )
+    layer = _image_layer(words, pages, key)
+    return map_each(layer, (key,), _LAYER_COLS, "pdf_text string", row)

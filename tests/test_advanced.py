@@ -664,3 +664,48 @@ class TestStreamCuration:
         }
         assert stream_fps, "stream curation kept nothing from the fixture"
         assert stream_fps == oracle_fps
+
+
+@pytest.mark.parametrize(
+    "surface",
+    ["image_stats", "audio_stats", "video_stats", "decode_media",
+     "extract_features", "resize_images"],
+)
+def test_media_surfaces_on_bad_payloads(spark, media_surfaces, surface):
+    """Every media surface on one good, one junk and one NULL payload, two
+    records per Arrow batch in one partition — so the second batch holds
+    ONLY the NULL.  Each payload yields one row: a status row with zero /
+    NULL fields for the bad ones, a NULL ``features`` for the NULL one."""
+    import numpy as np
+
+    call, good = media_surfaces[surface]
+    media = spark.createDataFrame(
+        [
+            (0, "image", bytearray(good)),
+            (1, "image", bytearray(b"JUNK0001")),
+            (2, "image", None),
+        ],
+        "media_id long, kind string, payload binary",
+    ).coalesce(1)
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "2")
+    try:
+        rows = {r["media_id"]: r.asDict() for r in call(media).collect()}
+    finally:
+        spark.conf.set(key, prev)
+    assert sorted(rows) == [0, 1, 2]
+    if surface == "extract_features":
+        assert rows[2]["features"] is None
+        for i in (0, 1):
+            assert abs(np.linalg.norm(rows[i]["features"]) - 1.0) < 1e-9
+        return
+    assert [rows[i]["status"] for i in (0, 1, 2)] == [
+        "ok", "unsupported_codec", "unsupported_codec"
+    ]
+    for i in (1, 2):
+        rest = {
+            k: v for k, v in rows[i].items()
+            if k not in ("media_id", "kind", "status")
+        }
+        assert set(rest.values()) <= {0, None}, rest

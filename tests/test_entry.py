@@ -1,6 +1,9 @@
 """Driver-contract tests: every queries() entry matches its DuckDB oracle
 at sf0.001 (the driver's own gate runs sf0.01)."""
 
+import json
+from pathlib import Path
+
 import duckdb
 import pandas as pd
 import pytest
@@ -8,6 +11,9 @@ import pytest
 import __spark_entry__ as entrymod
 
 SF_DIR = "/root/testdata/sf0.001"
+# every query's output schema, pinned: the oracle compare below ignores
+# dtypes, so a bigint -> int drift would otherwise pass it
+QUERY_SCHEMAS = json.loads(Path(__file__).with_name("query_schemas.json").read_text())
 
 
 @pytest.fixture(scope="module")
@@ -44,7 +50,9 @@ def test_every_query_has_oracle_or_is_declared(spark):
 @pytest.mark.parametrize("name", list(entrymod.queries()))
 def test_query_matches_oracle(spark, oracle_con, name):
     fn = entrymod.queries()[name]
-    got = _canon(fn(spark, SF_DIR).toPandas())
+    df = fn(spark, SF_DIR)
+    assert df.schema.simpleString() == QUERY_SCHEMAS[name]
+    got = _canon(df.toPandas())
     sql = entrymod.oracle_sql().get(name)
     if sql is None:
         assert len(got) >= 0  # rows-only check for non-SQL-expressible ops

@@ -2160,16 +2160,22 @@ def test_stratified_token_budget_empty_nonstring_stratum(spark):
     assert out.unionByName(got).count() == 2  # schemas actually union
 
 
-def test_resize_images_string_id(spark):
-    """r7 ADVICE fix: resize_images keeps a string id column instead of
-    silently casting it to long in the declared schema."""
-    from tesseract_rs_spark.functions.multimodal import pgm_encode, resize_images
-    import numpy as np
-
-    img = pgm_encode(np.arange(16, dtype=np.uint8).reshape(4, 4))
+@pytest.mark.parametrize(
+    "surface",
+    ["image_stats", "audio_stats", "video_stats", "decode_media",
+     "extract_features", "resize_images"],
+)
+def test_media_surfaces_keep_string_id(spark, media_surfaces, surface):
+    """Every media surface passes a string media_id through with its
+    input type; a hard-coded long id type fails the task."""
+    call, good = media_surfaces[surface]
     media = spark.createDataFrame(
-        [("m-1", bytearray(img))], "media_id string, payload binary"
+        [("m-1", "image", bytearray(good))],
+        "media_id string, kind string, payload binary",
     )
-    out = resize_images(media, out_w=2, out_h=2).collect()
-    assert out[0]["media_id"] == "m-1"
-    assert out[0]["status"] == "ok"
+    out = call(media)
+    assert out.schema["media_id"].dataType.simpleString() == "string"
+    rows = out.collect()
+    assert [r["media_id"] for r in rows] == ["m-1"]
+    if surface != "extract_features":
+        assert rows[0]["status"] == "ok"

@@ -392,3 +392,45 @@ def test_raster_surfaces_on_corrupt_pages(spark, surface):
         want = _good_page_rows(surface)
         assert want
         assert sorted(tuple(r)[1:] for r in rows) == sorted(want)
+
+
+def test_map_rows_rejects_row_width_drift(spark):
+    """Row tuples one field short of the DDL raise (the strict zip)
+    instead of shifting values into the wrong columns."""
+    from tesseract_rs_spark.operators.boundary import map_rows
+
+    df = spark.createDataFrame([("a", 1), ("b", 2)], "url string, n long")
+    out = map_rows(
+        df, ("url",), ("n",), "n2 long, tag string",
+        lambda pdf: [[(int(n) * 2,)] for n in pdf["n"]],
+    )
+    with pytest.raises(Exception, match="zip\\(\\) argument 2 is shorter"):
+        out.collect()
+
+
+def test_map_rows_nested_column_on_all_empty_batch(spark):
+    """A batch whose every row maps to zero output rows still converts a
+    nested column: two records per Arrow batch in one partition, so the
+    second batch holds only rows with no output."""
+    from pyspark.sql.types import DataType
+
+    from tesseract_rs_spark.operators.boundary import map_rows
+
+    fields = "i long, choices array<struct<glyph: string, conf: double>>"
+    df = spark.createDataFrame(
+        [("a", 2), ("b", 0), ("c", 0)], "url string, n long"
+    ).coalesce(1)
+    out = map_rows(
+        df, ("url",), ("n",), fields,
+        lambda pdf: [[(i, [("x", 0.5)]) for i in range(n)] for n in pdf["n"]],
+    )
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "2")
+    try:
+        rows = out.collect()
+    finally:
+        spark.conf.set(key, prev)
+    assert out.schema == DataType.fromDDL("url string, " + fields)
+    assert sorted((r["url"], r["i"]) for r in rows) == [("a", 0), ("a", 1)]
+    assert rows[0]["choices"][0]["glyph"] == "x"
